@@ -1,8 +1,11 @@
 """Session-scoped DataFrame cache hygiene for module-level caches.
 
 graph._TRI_CENSUS_CACHE and text._BIGRAM_CB_CACHE memoize NODE-/vocab-sized
-localCheckpoint'd frames per (applicationId, fixture dir). Two caveats this
-module exists to manage (r8 ADVICE):
+localCheckpoint'd frames per (applicationId, fixture dir);
+timeseries._MP_DISTS_CACHE holds the matrix-profile family's (dists, hourly)
+pair — the pair-distance frame and the hourly series it was built from, both
+lazy localCheckpoints, so a cold build runs no job of its own. Two caveats
+this module exists to manage (r8 ADVICE):
 
 - Entries for STOPPED sessions would otherwise pin dead DataFrames for the
   process lifetime. ``evict_stale`` drops every entry whose applicationId is
@@ -30,8 +33,9 @@ from __future__ import annotations
 def _drop(cache: dict, key) -> None:
     """Pop ``key`` and best-effort release its checkpoint blocks.
 
-    Cached values are either a DataFrame or a tuple of DataFrames (the
-    census cache stores (deg, tri_n)). DataFrame.unpersist only touches
+    Cached values are either a DataFrame or a tuple whose DataFrame
+    members are each released (the census cache stores (deg, tri_n), the
+    matrix-profile cache (dists, hourly)). DataFrame.unpersist only touches
     CacheManager entries — measured a NO-OP for localCheckpoint'd frames,
     whose blocks belong to the checkpointed RDD inside the plan's
     LogicalRDD leaf; unpersisting THAT rdd frees the blocks immediately

@@ -118,8 +118,10 @@ def distributed_row_number(
     # when the key column contains NaN (Spark orders NaN greatest), and
     # sorted() has no total order with NaN, so a NaN bound would make the
     # first-match CASE chain diverge from the order-independent HOF count.
-    # NaN keys themselves still bucket deterministically (every compare
-    # with NaN is false -> bucket 0 asc / n desc, same as the HOF form).
+    # NaN keys themselves still bucket deterministically: Spark SQL
+    # compares NaN GREATER than every double (not IEEE's all-false), so a
+    # NaN key lands in the last bucket ascending and in bucket 0
+    # descending — where Spark's NaN-greatest sort order puts it.
     bounds = sorted({b for b in df.approxQuantile(key, probs, 0.001) if b == b})
     bdf = df.withColumn("__bkt", _bucket_expr(bounds, key, descending=descending))
 

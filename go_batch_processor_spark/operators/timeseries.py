@@ -4550,47 +4550,60 @@ def timeseries_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact stream compresses to the CALENDAR-BOUNDED
     hourly frame first (partial-combinable). The O(n^2) pair space is
     organized by DIAGONAL d = j - i: cross products come from ONE
-    banded self-join and per-diagonal running windows (PARTITION BY d
+    banded self-join and one per-diagonal RUNNING sum (PARTITION BY d
     — n independent partitions, embarrassingly parallel, never a
     single-partition sort), the STOMP decomposition in relational
-    form. Cost scales with SERIES LENGTH squared, not data volume; for
-    multi-year series at 100 TB, band d to a motif horizon or switch
-    to the MASS/FFT kernel per partition — documented, not needed at a
-    720-point series.
+    form. The argmin is ONE aggregate, min(struct(dist, j)) per i.
+    Cost scales with SERIES LENGTH squared, once, not with data volume
+    or window length; for multi-year series at 100 TB, band d to a
+    motif horizon or switch to the MASS/FFT kernel per partition —
+    documented, not needed at a 720-point series.
     """
-    dists, _n = _mp_dists(spark, sf_dir)
-    sym = dists.unionByName(
-        dists.select(
-            F.col("j").alias("i"), F.col("i").alias("j"), "dist"
-        )
-    )
-    # subsequence-count-sized frame (<= series length) — broadcast it to
-    # the pair-sized sym side for the argmin join
-    mp = F.broadcast(sym.groupBy("i").agg(F.min("dist").alias("mp")))
     return (
-        mp.join(sym.withColumnRenamed("i", "mi"),
-                (F.col("mi") == mp.i) & (F.col("dist") == F.col("mp")))
-        .groupBy(mp.i, "mp")
-        .agg(F.min("j").cast("bigint").alias("nn_idx"))
+        _mp_self_profile(spark, sf_dir)
         .select("i", F.round("mp", 6).alias("mp_dist"), "nn_idx")
         .orderBy("i")
     )
 
 
+def _mp_argmin(pairs: DataFrame, by: str, other: str, idx: str) -> DataFrame:
+    """(by, mp, idx): per ``by``, mp = min(dist) and idx the smallest
+    ``other`` at that distance, as ONE min(struct(dist, other)) — struct
+    order is dist first, then ``other``: the oracles' min + join-back +
+    min tie rule. NULL distances drop first, as from min()."""
+    return (
+        pairs.filter(F.col("dist").isNotNull())
+        .groupBy(by)
+        .agg(F.min(F.struct("dist", other)).alias("b"))
+        .select(by, F.col("b.dist").alias("mp"),
+                F.col(f"b.{other}").cast("bigint").alias(idx))
+    )
+
+
+def _mp_self_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(i, mp, nn_idx) over both directions of the i < j pair frame — the
+    profile that timeseries_matrix_profile prints and discord_topk ranks."""
+    dists, _hourly = _mp_dists(spark, sf_dir)
+    sym = dists.unionByName(
+        dists.select(F.col("j").alias("i"), F.col("i").alias("j"), "dist")
+    )
+    return _mp_argmin(sym, "i", "j", "nn_idx")
+
+
 # Shared pairwise-distance frame for the matrix-profile family (r10):
-# the self-join profile and the AB-join consume the IDENTICAL
-# (i, j, dist) frame (the join's pairs are the subset with d >= m), so
-# one banded self-join + per-diagonal window pass serves both keys.
-# Same (applicationId, fixture) cache discipline as graph's pivot
-# frame; hygiene caveats in go_batch_processor_spark.dfcache.
+# all four keys read the IDENTICAL (i, j, dist) frame (the AB-join's
+# pairs are the subset with d >= m). Same (applicationId, fixture) cache
+# discipline as graph's pivot frame; caveats in dfcache.
 _MP_DISTS_CACHE: dict = {}
 
 
 def _mp_dists(spark: SparkSession, sf_dir: str):
-    """(dists, n): the one-directional (i < j) z-normalized distance
+    """(dists, hourly): the one-directional (i < j) z-normalized distance
     frame over all subsequence pairs with diagonal d >= MP_EXCL_H, and
-    the hourly series length n. localCheckpoint'd; pair-count-sized
-    (bounded by series length squared, not data volume)."""
+    the hourly (i, cents) series it was built from. Both
+    localCheckpoint'd and lazy — a cold build runs no job until a
+    consumer does. Pair-count-sized: cost scales with series length
+    squared, once, not with data volume or the window length m."""
     import os
 
     key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
@@ -4600,55 +4613,60 @@ def _mp_dists(spark: SparkSession, sf_dir: str):
     if key in _MP_DISTS_CACHE:
         return _MP_DISTS_CACHE[key]
     ev = load_table(spark, sf_dir, "events")
+    cents = F.sum(F.round(F.col("value") * 100).cast("long")).cast("bigint")
     hourly = (
         ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        .agg(cents.alias("cents"))
         .select(
-            F.row_number()
-            .over(Window.partitionBy().orderBy("h"))
-            .cast("bigint")
-            .alias("i"),
+            F.row_number().over(Window.orderBy("h")).cast("bigint").alias("i"),
             "cents",
         )
         .localCheckpoint(eager=False)
     )
     m = MP_WINDOW_H
     w_roll = Window.orderBy("i").rowsBetween(0, m - 1)
-    stats = hourly.select(
+    q = F.sum(F.expr("CAST(cents AS DECIMAL(38,0)) * cents"))
+    subs = hourly.select(
         "i",
-        "cents",
         F.sum("cents").over(w_roll).cast("bigint").alias("s"),
-        F.sum(F.expr("CAST(cents AS DECIMAL(38,0)) * cents"))
-        .over(w_roll)
-        .alias("q"),
+        q.over(w_roll).alias("q"),
         F.count(F.lit(1)).over(w_roll).alias("cnt"),
-    )
-    subs = stats.filter(F.col("cnt") == m).select("i", "s", "q")
-    a = hourly.alias("a")
-    b = hourly.alias("b")
-    prods = a.join(
-        b, F.col("b.i") - F.col("a.i") >= MP_EXCL_H
-    ).select(
+    ).filter(F.col("cnt") == m)
+    a, b = hourly.alias("a"), hourly.alias("b")
+    prods = a.join(b, F.col("b.i") - F.col("a.i") >= MP_EXCL_H).select(
         F.col("a.i").alias("t"),
         (F.col("b.i") - F.col("a.i")).alias("d"),
         F.expr("CAST(a.cents AS DECIMAL(38,0)) * b.cents").alias("w"),
     )
-    w_diag = Window.partitionBy("d").orderBy("t").rowsBetween(0, m - 1)
-    pw = prods.select(
-        F.col("t").alias("i"),
-        "d",
-        F.sum("w").over(w_diag).alias("p"),
-        F.count(F.lit(1)).over(w_diag).alias("pcnt"),
-    ).filter(F.col("pcnt") == m)
-    si = subs.select(
-        F.col("i").alias("si_i"), F.col("s").alias("si_s"), F.col("q").alias("si_q")
+    # Window cross product P = sum(w[t .. t+m-1]) as a difference of one
+    # RUNNING sum c: P = c[t+m-1] - c[t] + w[t] (a sliding ROWS frame
+    # re-adds all m terms per row; exact integers, so the same P). A
+    # window past the diagonal's end has no lead and drops (the oracle's
+    # pcnt = m). All-NULL hours give NULL cents: c adds them as 0, and
+    # the count k of non-NULL products keeps sum()'s NULL for a window
+    # with none (greatest(0, ..) then yields 0.0 on both engines).
+    w_diag = Window.partitionBy("d").orderBy("t")
+    run = w_diag.rowsBetween(Window.unboundedPreceding, 0)
+    w0 = F.coalesce("w", F.lit(0))
+    pw = (
+        prods.select(
+            "t", "d", "w",
+            F.sum(w0).over(run).alias("c"),
+            F.count("w").over(run).alias("k"),
+        )
+        .select(
+            F.col("t").alias("i"),
+            "d",
+            (F.lead("c", m - 1).over(w_diag) - F.col("c") + w0).alias("p"),
+            (F.lead("k", m - 1).over(w_diag) - F.col("k")
+             + F.col("w").isNotNull().cast("long")).alias("nw"),
+        )
+        .filter(F.col("p").isNotNull())
+        .withColumn("p", F.when(F.col("nw") > 0, F.col("p")))
     )
-    sj = subs.select(
-        F.col("i").alias("sj_i"), F.col("s").alias("sj_s"), F.col("q").alias("sj_q")
+    si, sj = (
+        subs.select(*(F.col(c).alias(f"{side}_{c}") for c in ("i", "s", "q")))
+        for side in ("si", "sj")
     )
     dist_expr = F.expr(
         f"CASE WHEN {m} * si_q - CAST(si_s AS DECIMAL(38,0)) * si_s > 0"
@@ -4666,16 +4684,11 @@ def _mp_dists(spark: SparkSession, sf_dir: str):
     dists = (
         pw.join(F.broadcast(si), F.col("si_i") == F.col("i"))
         .join(F.broadcast(sj), F.col("sj_i") == F.col("i") + F.col("d"))
-        .select(
-            "i",
-            (F.col("i") + F.col("d")).alias("j"),
-            dist_expr.alias("dist"),
-        )
+        .select("i", (F.col("i") + F.col("d")).alias("j"), dist_expr.alias("dist"))
         .localCheckpoint(eager=False)
     )
-    n = int(hourly.agg(F.max("i")).collect()[0][0] or 0)
-    _MP_DISTS_CACHE[key] = (dists, n)
-    return dists, n
+    _MP_DISTS_CACHE[key] = (dists, hourly)
+    return dists, hourly
 
 
 @register(
@@ -4709,28 +4722,21 @@ def timeseries_matrix_profile_join(spark: SparkSession, sf_dir: str) -> DataFram
     SUBSET of the shared distance frame).
 
     Exactness/scale shape: consumes the SAME cached pairwise distance
-    frame as timeseries_matrix_profile (_mp_dists — one banded
-    self-join + per-diagonal integer windows serves both keys; running
-    both pays the O(n^2) pass once), then one filter + one
-    partial-combinable groupBy(j) min and a broadcast argmin join.
-    Split point is the series midpoint (max(i) DIV 2) — deterministic,
-    calendar-derived. All determinism properties inherit from the base
-    frame (exact integer sufficient statistics, one exact->double cast,
-    zero-variance subsequences NULL out).
+    frame as timeseries_matrix_profile (_mp_dists — running both pays
+    the O(n^2) pass once), then one filter and one partial-combinable
+    min(struct(dist, i)) per j (_mp_argmin). Split point is the series
+    midpoint (max(i) DIV 2) — deterministic, calendar-derived. All
+    determinism properties inherit from the base frame (exact integer
+    sufficient statistics, one exact->double cast, zero-variance
+    subsequences NULL out).
     """
-    dists, n = _mp_dists(spark, sf_dir)
-    na = n // 2
+    dists, hourly = _mp_dists(spark, sf_dir)
+    na = hourly.count() // 2  # i is a row_number: count = max(i)
     ab = dists.filter(
         (F.col("i") <= na - MP_WINDOW_H + 1) & (F.col("j") >= na + 1)
     )
-    mpj = F.broadcast(ab.groupBy("j").agg(F.min("dist").alias("mp")))
     return (
-        mpj.join(
-            ab.withColumnRenamed("j", "bj"),
-            (F.col("bj") == mpj.j) & (F.col("dist") == F.col("mp")),
-        )
-        .groupBy(mpj.j, "mp")
-        .agg(F.min("i").cast("bigint").alias("nn_i"))
+        _mp_argmin(ab, "j", "i", "nn_i")
         .select("j", F.round("mp", 6).alias("mpj_dist"), "nn_i")
         .orderBy("j")
     )
@@ -4774,7 +4780,7 @@ def timeseries_motif_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (i, j) tie-break selects the identical pair set; TakeOrderedAndProject
     keeps the top-k a partial-combinable aggregate, never a global sort.
     """
-    dists, _n = _mp_dists(spark, sf_dir)
+    dists, _hourly = _mp_dists(spark, sf_dir)
     return (
         dists.filter(F.col("dist").isNotNull())
         .orderBy("dist", "i", "j")
@@ -4825,22 +4831,12 @@ def timeseries_discord_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n^2) pairwise pass (_mp_dists — profile, AB-join, motif top-k,
     discord top-k all ride the same frame); distances are bit-identical
     doubles (exact integer sufficient statistics, one cast each), so
-    min per i, the argmin tie-break (smallest j), and ORDER BY mp DESC
-    with the i tie-break select the identical rows; the top-k plans as
-    TakeOrderedAndProject over the subsequence-sized mp frame.
+    the shared argmin (_mp_self_profile: smallest j on ties) and ORDER
+    BY mp DESC with the i tie-break select the identical rows; the top-k
+    plans as TakeOrderedAndProject over the subsequence-sized mp frame.
     """
-    dists, _n = _mp_dists(spark, sf_dir)
-    sym = dists.unionByName(
-        dists.select(F.col("j").alias("i"), F.col("i").alias("j"), "dist")
-    )
-    mp = F.broadcast(sym.groupBy("i").agg(F.min("dist").alias("mp")))
     return (
-        mp.join(
-            sym.withColumnRenamed("i", "mi"),
-            (F.col("mi") == mp.i) & (F.col("dist") == F.col("mp")),
-        )
-        .groupBy(mp.i, "mp")
-        .agg(F.min("j").cast("bigint").alias("nn_idx"))
+        _mp_self_profile(spark, sf_dir)
         .orderBy(F.col("mp").desc(), F.col("i"))
         .limit(DISCORD_TOP_K)
         .select("i", F.round("mp", 6).alias("mp_dist"), "nn_idx")

@@ -18,6 +18,10 @@ Deliberate deltas (SURVEY.md §7.4 — improvements, documented not copied):
   - worker counter incremented synchronously at dispatch, eliminating the
     reference's 50 ms anti-overprovision sleep (race workaround at :142-143);
   - drain uses a condition variable, not a 10 ms busy-wait poll (:89-96);
+  - the scheduler parks on the same condition variable while every slot
+    is busy instead of re-entering try_process_batch in a tight loop; a
+    worker's exit or stop() wakes it, so a saturated pipeline costs no
+    driver CPU;
   - fetch errors support configurable retry/backoff, finishing the
     reference's TODO at :128 (default: drop-and-continue, same as reference);
   - the timeout actively cancels the in-flight Spark job group
@@ -169,6 +173,7 @@ class BatchPipeline:
         # R11: set stop flag, drain in-flight batches (never cancel them).
         self._stop_signal.set()
         with self._cv:
+            self._cv.notify_all()  # wake a scheduler parked on a full pool
             while self._current_workers > 0:
                 self._cv.wait(timeout=0.5)
         if self._scheduler is not None:
@@ -178,6 +183,12 @@ class BatchPipeline:
 
     def _scheduler_loop(self) -> None:
         while not self._stop_signal.is_set():
+            with self._cv:
+                while (
+                    self._current_workers >= self._max_workers
+                    and not self._stop_signal.is_set()
+                ):
+                    self._cv.wait()
             self.try_process_batch()
 
     def try_process_batch(self) -> None:
@@ -237,13 +248,18 @@ class BatchPipeline:
             except Exception:  # pragma: no cover — cancellation best-effort
                 log.exception("cancelJobGroup failed")
 
-        timer = threading.Timer(self._timeout_ms / 1000.0, _cancel)
-        timer.daemon = True
+        # No timer thread per batch unless a timeout was configured: the
+        # default (~24.8 days) never fires in practice.
+        timer = None
+        if self._timeout_ms != DEFAULT_PROCESSOR_TIMEOUT_MS:
+            timer = threading.Timer(self._timeout_ms / 1000.0, _cancel)
+            timer.daemon = True
         result: Optional[DataFrame] = None
         error: Optional[Exception] = None
         try:
             sc.setJobGroup(group, "BatchPipeline batch", interruptOnCancel=True)
-            timer.start()
+            if timer is not None:
+                timer.start()
             try:
                 result = self._processor.process_batch(batch)
             except Exception as exc:  # processor error -> error channel
@@ -263,7 +279,8 @@ class BatchPipeline:
                 )
             self._finalize_if_configured(result, error)
         finally:
-            timer.cancel()
+            if timer is not None:
+                timer.cancel()
             with self._cv:
                 self._current_workers -= 1
                 self._cv.notify_all()

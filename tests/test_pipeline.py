@@ -270,6 +270,77 @@ def test_worker_saturation_caps_concurrency(spark):
     assert max(peak) <= 2
 
 
+def test_saturated_scheduler_parks_instead_of_spinning(spark):
+    """While every slot is busy the scheduler waits on the condition
+    variable: one worker sleeping for a second leaves the driver process
+    nearly idle (a polling scheduler burns a full core over the window)."""
+    df = tiny_df(spark)
+    started = threading.Event()
+
+    def slow(batch):
+        started.set()
+        time.sleep(1.0)
+        return batch
+
+    pipe = BatchPipeline(1, FnSupplier(lambda: df), FnProcessor(slow))
+    pipe.start()
+    assert started.wait(10.0)
+    cpu0 = time.process_time()
+    time.sleep(0.8)
+    cpu = time.process_time() - cpu0
+    pipe.stop()
+    assert pipe.current_workers == 0
+    assert cpu < 0.3, cpu
+
+
+def test_parked_scheduler_loses_no_wakeup_under_thread_churn(spark):
+    """Stress for the park/wake protocol: more slots than cores, many
+    one-millisecond batches and a tiny thread switch interval. A lost
+    wake-up would strand the scheduler on a free pool; every batch must
+    still finalize, the pool never exceeds its cap, and stop() ends the
+    scheduler thread."""
+    import sys
+
+    df = tiny_df(spark)
+    n, slots = 200, 8
+    lock = threading.Lock()
+    served, inflight, peak = [0], [0], [0]
+
+    def fetch():
+        with lock:
+            if served[0] >= n:
+                return None
+            served[0] += 1
+        return df
+
+    def proc(batch):
+        with lock:
+            inflight[0] += 1
+            peak[0] = max(peak[0], inflight[0])
+        time.sleep(0.001)
+        with lock:
+            inflight[0] -= 1
+        return batch
+
+    rec = Recorder()
+    pipe = (
+        BatchPipeline(slots, FnSupplier(fetch), FnProcessor(proc))
+        .with_finalizer(rec)
+        .with_no_batch_sleep_interval_ms(10)
+    )
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        pipe.start()
+        calls = rec.wait_calls(n, timeout=60.0)
+        pipe.stop()
+    finally:
+        sys.setswitchinterval(old)
+    assert len(calls) == n and all(err is None for _, err in calls)
+    assert peak[0] <= slots
+    assert not pipe._scheduler.is_alive()
+
+
 # ---- stop/drain (reference :236-268) -------------------------------------
 
 

@@ -165,3 +165,40 @@ def test_median_band_isolation_single_shuffle(spark, sf_dir):
     # partial aggregation present upstream of the shuffle (map-side
     # combine is what keeps the sentinel mass off the wire)
     assert "partial_count" in plan, plan
+
+
+def test_matrix_profile_argmin_is_one_aggregate_no_join_back(spark, sf_dir):
+    """The profile's argmin is ONE min(struct(dist, j)) per i over the
+    checkpointed pair frame: no min + broadcast join-back onto the
+    two-directional pair union, hence no join at all and a single hash
+    exchange (the range exchange is the final ORDER BY)."""
+    plan = _executed(REGISTRY["timeseries_matrix_profile"].fn(spark, sf_dir))
+    assert "Join" not in plan, plan
+    assert len(re.findall(r"(?<!partial_)min\(struct\(dist", plan)) == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+
+
+def test_matrix_profile_cold_build_job_budget(spark, sf_dir, tmp_path):
+    """A cold timeseries_matrix_profile (fresh fixture path, so the
+    shared pair-frame cache misses) runs at most 10 jobs; a min +
+    join-back argmin plus an eager series-length collect in the shared
+    build made it 14. The sibling motif top-k then reads the cached
+    frame in one."""
+    import os
+
+    (tmp_path / "events.parquet").symlink_to(
+        os.path.realpath(os.path.join(sf_dir, "events.parquet"))
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for key in ("timeseries_matrix_profile", "timeseries_motif_topk"):
+            group = f"plan-regression-{key}-{tmp_path.name}"
+            sc.setJobGroup(group, key)
+            REGISTRY[key].fn(spark, str(tmp_path)).collect()
+            jobs[key] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["timeseries_matrix_profile"] <= 10, jobs
+    assert jobs["timeseries_motif_topk"] == 1, jobs
