@@ -152,8 +152,9 @@ HEADLINE = [
     "ml_isolation_forest",
     "similarity_knn_classifier",
     # round 10 new-key headliners: the two plan-heaviest additions of the
-    # round (exact matrix profile = banded self-join + per-diagonal
-    # windows; harmonic centrality = the batched multi-pivot BFS core),
+    # round (exact matrix profile, now one hourly aggregate plus a
+    # driver-side STOMP pass; harmonic centrality = the batched
+    # multi-pivot BFS core),
     # plus their cache-sharing siblings — in-bench these should read
     # near-zero AFTER their family key, which IS the plan evidence the
     # shared-frame doctrine claims.
@@ -203,9 +204,9 @@ CHECKPOINT_HEAVY = [
     "stats_cox_ph",
     "dedup_containment_ngram",
     # r12 (r11 verdict item 4): the one recovered r11 in-bench uptick
-    # (0.89 -> 1.15 s after discord joined as the fourth _mp_dists
-    # consumer) — record its standalone pair to separate interleave
-    # noise from a real cache-path change.
+    # (0.89 -> 1.15 s after discord joined as the fourth consumer of the
+    # family's shared result cache, now _mp_rows) — record its standalone
+    # pair to separate interleave noise from a real cache-path change.
     "timeseries_matrix_profile",
 ]
 

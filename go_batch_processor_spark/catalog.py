@@ -237,6 +237,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
 
 
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``ddl`` column
+    order), built from an Arrow table so it plans as a LocalTableScan.
+
+    The list form of ``createDataFrame`` plans as ``Scan ExistingRDD``: a
+    parallelize RDD whose every action schedules a job (a 697-row frame
+    sorted and collected in 0.65 s that way, 0.11 s from Arrow)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(T._parse_datatype_string(ddl))
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+    return spark.createDataFrame(table)
+
+
 def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Streaming (readStream) variant of load_table: file-stream source over
     one fixture table, same unit-detecting schema handling as load_table."""

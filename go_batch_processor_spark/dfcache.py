@@ -2,10 +2,10 @@
 
 graph._TRI_CENSUS_CACHE and text._BIGRAM_CB_CACHE memoize NODE-/vocab-sized
 localCheckpoint'd frames per (applicationId, fixture dir);
-timeseries._MP_DISTS_CACHE holds the matrix-profile family's (dists, hourly)
-pair — the pair-distance frame and the hourly series it was built from, both
-lazy localCheckpoints, so a cold build runs no job of its own. Two caveats
-this module exists to manage (r8 ADVICE):
+timeseries._MP_ROWS_CACHE holds the matrix-profile family's three driver-side
+row lists (profile, AB-join, motif top-k) — plain Python rows, no checkpoint,
+so only the first caveat below applies to it. Two caveats this module exists
+to manage (r8 ADVICE):
 
 - Entries for STOPPED sessions would otherwise pin dead DataFrames for the
   process lifetime. ``evict_stale`` drops every entry whose applicationId is
@@ -34,8 +34,9 @@ def _drop(cache: dict, key) -> None:
     """Pop ``key`` and best-effort release its checkpoint blocks.
 
     Cached values are either a DataFrame or a tuple whose DataFrame
-    members are each released (the census cache stores (deg, tri_n), the
-    matrix-profile cache (dists, hourly)). DataFrame.unpersist only touches
+    members are each released (the census cache stores (deg, tri_n); the
+    matrix-profile cache's row lists have nothing to release and are just
+    dropped). DataFrame.unpersist only touches
     CacheManager entries — measured a NO-OP for localCheckpoint'd frames,
     whose blocks belong to the checkpointed RDD inside the plan's
     LogicalRDD leaf; unpersisting THAT rdd frees the blocks immediately
@@ -67,16 +68,17 @@ def evict_stale(cache: dict, current_app_id: str, cap: int = 8) -> None:
 
 
 def clear_all() -> None:
-    """Drop every module-level DataFrame cache (bench standalone honesty:
-    a solo-timed sample must not silently reuse a checkpoint built during
-    the interleaved pass). Unpersists each entry so the storage blocks are
-    gone, not merely unreferenced."""
+    """Drop every module-level cache (bench standalone honesty: a
+    solo-timed sample must not silently reuse a checkpoint or a result
+    built during the interleaved pass). Unpersists each DataFrame entry so
+    the storage blocks are gone, not merely unreferenced; the
+    matrix-profile row lists are simply dropped."""
     from go_batch_processor_spark.operators import graph, text, timeseries
 
     for cache in (
         graph._TRI_CENSUS_CACHE,
         graph._PIVOT_DIST_CACHE,  # r10: centrality-family shared BFS
-        timeseries._MP_DISTS_CACHE,  # r10: matrix-profile pair frame
+        timeseries._MP_ROWS_CACHE,  # matrix-profile family row lists
         text._BIGRAM_CB_CACHE,
     ):
         for k in list(cache):

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from go_batch_processor_spark.catalog import load_table
+from go_batch_processor_spark.catalog import load_table, local_frame
 from go_batch_processor_spark.registry import register
 
 
@@ -736,7 +736,7 @@ def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [(t, _round6_floor(ns[f"b{k}"])) for k, t in enumerate(terms)] + [
         ("r2", _round6_floor(ns["r2"]))
     ]
-    return spark.createDataFrame(out, "term string, value double")
+    return local_frame(spark, out, "term string, value double")
 
 
 PCA_TOP = 5  # principal components reported
@@ -1012,7 +1012,7 @@ def ml_logreg_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [(t, _round6_floor(b)) for t, b in zip(terms, beta)] + [
         ("log_loss", _round6_floor(ll))
     ]
-    return spark.createDataFrame(out, "term string, value double")
+    return local_frame(spark, out, "term string, value double")
 
 
 GMM_K = 4
@@ -1645,7 +1645,7 @@ def ml_ridge_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [("intercept", _round6_floor(ns["icept"]))] + [
         (t, _round6_floor(ns[f"b{k}"])) for k, t in enumerate(OLS_FEATURES)
     ]
-    return spark.createDataFrame(out, "term string, value double")
+    return local_frame(spark, out, "term string, value double")
 
 
 @register(
@@ -2386,7 +2386,7 @@ def ml_quantile_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
     finally:
         li.unpersist(blocking=False)
-    return spark.createDataFrame(out, "term string, value double")
+    return local_frame(spark, out, "term string, value double")
 
 
 IFOREST_TREES = 50
@@ -2759,7 +2759,7 @@ def ml_linear_svm_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("l_tax", _round6_floor(w3)),
         ("objective", _round6_floor(obj)),
     ]
-    return spark.createDataFrame(out, "term string, value double")
+    return local_frame(spark, out, "term string, value double")
 
 
 TREE_FEATURES = ["l_quantity", "l_discount", "l_tax"]
@@ -3820,4 +3820,4 @@ def ml_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("base_rate", _round6_floor(n_pos / n_all)),
         ("avg_calibrated_p", _round6_floor(avgp_num / n_all)),
     ]
-    return spark.createDataFrame(out, "term string, value double")
+    return local_frame(spark, out, "term string, value double")

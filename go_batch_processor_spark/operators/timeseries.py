@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from go_batch_processor_spark.catalog import load_table
+from go_batch_processor_spark.catalog import load_table, local_frame
 from go_batch_processor_spark.registry import register
 
 HIST_BIN = 25.0
@@ -4538,157 +4538,128 @@ def timeseries_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness shape: hourly cents are exact BIGINTs, so the rolling
     S_i = sum(v), Q_i = sum(v^2) and every per-diagonal cross-product
-    window P_ij = sum_t v_t*v_(t+d) are exact HUGEINT/DECIMAL(38,0)
-    integers (v^2 sums are the ansari overflow class); the pairwise
-    distance sqrt(max(0, 2m(1 - rho))) with
-    rho = (m*P - S_i*S_j)/sqrt((m*Q_i - S_i^2)(m*Q_j - S_j^2)) takes
-    one exact->double cast per factor — bit-identical across engines,
-    so min() selects the identical neighbor (ties -> smallest index on
-    both sides; greatest(0,..) clips the one-ulp negative 2m(1-rho)
-    can reach when a subsequence meets a near-exact copy).
+    window P_ij = sum_t v_t*v_(t+d) are exact integers (v^2 sums are the
+    ansari overflow class); the pairwise distance sqrt(max(0,
+    2m(1 - rho))) with rho = (m*P - S_i*S_j)/sqrt((m*Q_i - S_i^2)(m*Q_j
+    - S_j^2)) takes one exact->double cast per factor — bit-identical
+    across engines, so the argmin selects the identical neighbor (ties
+    -> smallest index; greatest(0,..) clips the one-ulp negative
+    2m(1 - rho) can reach when a subsequence meets a near-exact copy).
 
-    Scale shape: the fact stream compresses to the CALENDAR-BOUNDED
-    hourly frame first (partial-combinable). The O(n^2) pair space is
-    organized by DIAGONAL d = j - i: cross products come from ONE
-    banded self-join and one per-diagonal RUNNING sum (PARTITION BY d
-    — n independent partitions, embarrassingly parallel, never a
-    single-partition sort), the STOMP decomposition in relational
-    form. The argmin is ONE aggregate, min(struct(dist, j)) per i.
-    Cost scales with SERIES LENGTH squared, once, not with data volume
-    or window length; for multi-year series at 100 TB, band d to a
-    motif horizon or switch to the MASS/FFT kernel per partition —
-    documented, not needed at a 720-point series.
+    Scale shape: ONE distributed job, the partial-combinable events ->
+    hourly aggregate; its n rows (n = hours spanned: calendar-bounded,
+    independent of event volume) go to the driver, where one STOMP pass
+    (_mp_kernel) costs O(n^2) time and O(n) memory and yields the
+    profile, the AB-join and the motif top-k at once (_mp_rows caches
+    them). The result returns as a LocalTableScan (local_frame). For
+    multi-year series, band d to a motif horizon or switch to the
+    MASS/FFT kernel — documented, not needed at a 720-point series.
     """
-    return (
-        _mp_self_profile(spark, sf_dir)
-        .select("i", F.round("mp", 6).alias("mp_dist"), "nn_idx")
-        .orderBy("i")
+    profile, _ab, _motif = _mp_rows(spark, sf_dir)
+    return local_frame(spark, profile, "i bigint, mp double, nn_idx bigint").select(
+        "i", F.round("mp", 6).alias("mp_dist"), "nn_idx"
     )
 
 
-def _mp_argmin(pairs: DataFrame, by: str, other: str, idx: str) -> DataFrame:
-    """(by, mp, idx): per ``by``, mp = min(dist) and idx the smallest
-    ``other`` at that distance, as ONE min(struct(dist, other)) — struct
-    order is dist first, then ``other``: the oracles' min + join-back +
-    min tie rule. NULL distances drop first, as from min()."""
-    return (
-        pairs.filter(F.col("dist").isNotNull())
-        .groupBy(by)
-        .agg(F.min(F.struct("dist", other)).alias("b"))
-        .select(by, F.col("b.dist").alias("mp"),
-                F.col(f"b.{other}").cast("bigint").alias(idx))
-    )
+# Matrix-profile family results per (applicationId, fixture): the row
+# lists of one _mp_kernel pass, shared by all four keys. Plain Python
+# rows, no checkpoint; eviction rules in dfcache.
+_MP_ROWS_CACHE: dict = {}
 
 
-def _mp_self_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(i, mp, nn_idx) over both directions of the i < j pair frame — the
-    profile that timeseries_matrix_profile prints and discord_topk ranks."""
-    dists, _hourly = _mp_dists(spark, sf_dir)
-    sym = dists.unionByName(
-        dists.select(F.col("j").alias("i"), F.col("i").alias("j"), "dist")
-    )
-    return _mp_argmin(sym, "i", "j", "nn_idx")
-
-
-# Shared pairwise-distance frame for the matrix-profile family (r10):
-# all four keys read the IDENTICAL (i, j, dist) frame (the AB-join's
-# pairs are the subset with d >= m). Same (applicationId, fixture) cache
-# discipline as graph's pivot frame; caveats in dfcache.
-_MP_DISTS_CACHE: dict = {}
-
-
-def _mp_dists(spark: SparkSession, sf_dir: str):
-    """(dists, hourly): the one-directional (i < j) z-normalized distance
-    frame over all subsequence pairs with diagonal d >= MP_EXCL_H, and
-    the hourly (i, cents) series it was built from. Both
-    localCheckpoint'd and lazy — a cold build runs no job until a
-    consumer does. Pair-count-sized: cost scales with series length
-    squared, once, not with data volume or the window length m."""
+def _mp_rows(spark: SparkSession, sf_dir: str):
+    """(profile, ab_join, motif) row lists of the fixture's hourly series:
+    the one distributed job is the hourly sum(round(value*100)), whose
+    rows are ordered as row_number() OVER (ORDER BY h) numbers them
+    (ascending, NULLS FIRST) and handed to _mp_kernel."""
     import os
 
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
     from go_batch_processor_spark.dfcache import evict_stale
 
-    evict_stale(_MP_DISTS_CACHE, key[0])
-    if key in _MP_DISTS_CACHE:
-        return _MP_DISTS_CACHE[key]
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.sum(F.round(F.col("value") * 100).cast("long")).cast("bigint")
-    hourly = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
-        .agg(cents.alias("cents"))
-        .select(
-            F.row_number().over(Window.orderBy("h")).cast("bigint").alias("i"),
-            "cents",
+    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
+    evict_stale(_MP_ROWS_CACHE, key[0])
+    if key not in _MP_ROWS_CACHE:
+        ev = load_table(spark, sf_dir, "events")
+        cents = F.sum(F.round(F.col("value") * 100).cast("long")).cast("bigint")
+        hourly = (
+            ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
+            .agg(cents.alias("cents"))
+            .select(F.unix_micros("h").alias("h"), "cents")
+            .collect()
         )
-        .localCheckpoint(eager=False)
-    )
-    m = MP_WINDOW_H
-    w_roll = Window.orderBy("i").rowsBetween(0, m - 1)
-    q = F.sum(F.expr("CAST(cents AS DECIMAL(38,0)) * cents"))
-    subs = hourly.select(
-        "i",
-        F.sum("cents").over(w_roll).cast("bigint").alias("s"),
-        q.over(w_roll).alias("q"),
-        F.count(F.lit(1)).over(w_roll).alias("cnt"),
-    ).filter(F.col("cnt") == m)
-    a, b = hourly.alias("a"), hourly.alias("b")
-    prods = a.join(b, F.col("b.i") - F.col("a.i") >= MP_EXCL_H).select(
-        F.col("a.i").alias("t"),
-        (F.col("b.i") - F.col("a.i")).alias("d"),
-        F.expr("CAST(a.cents AS DECIMAL(38,0)) * b.cents").alias("w"),
-    )
-    # Window cross product P = sum(w[t .. t+m-1]) as a difference of one
-    # RUNNING sum c: P = c[t+m-1] - c[t] + w[t] (a sliding ROWS frame
-    # re-adds all m terms per row; exact integers, so the same P). A
-    # window past the diagonal's end has no lead and drops (the oracle's
-    # pcnt = m). All-NULL hours give NULL cents: c adds them as 0, and
-    # the count k of non-NULL products keeps sum()'s NULL for a window
-    # with none (greatest(0, ..) then yields 0.0 on both engines).
-    w_diag = Window.partitionBy("d").orderBy("t")
-    run = w_diag.rowsBetween(Window.unboundedPreceding, 0)
-    w0 = F.coalesce("w", F.lit(0))
-    pw = (
-        prods.select(
-            "t", "d", "w",
-            F.sum(w0).over(run).alias("c"),
-            F.count("w").over(run).alias("k"),
-        )
-        .select(
-            F.col("t").alias("i"),
-            "d",
-            (F.lead("c", m - 1).over(w_diag) - F.col("c") + w0).alias("p"),
-            (F.lead("k", m - 1).over(w_diag) - F.col("k")
-             + F.col("w").isNotNull().cast("long")).alias("nw"),
-        )
-        .filter(F.col("p").isNotNull())
-        .withColumn("p", F.when(F.col("nw") > 0, F.col("p")))
-    )
-    si, sj = (
-        subs.select(*(F.col(c).alias(f"{side}_{c}") for c in ("i", "s", "q")))
-        for side in ("si", "sj")
-    )
-    dist_expr = F.expr(
-        f"CASE WHEN {m} * si_q - CAST(si_s AS DECIMAL(38,0)) * si_s > 0"
-        f"      AND {m} * sj_q - CAST(sj_s AS DECIMAL(38,0)) * sj_s > 0"
-        f" THEN sqrt(greatest(CAST(0 AS DOUBLE),"
-        f" 2.0 * {m}"
-        f" * (1.0 - CAST({m} * p"
-        f"               - CAST(si_s AS DECIMAL(38,0)) * sj_s AS DOUBLE)"
-        f"     / sqrt(CAST({m} * si_q"
-        f"                 - CAST(si_s AS DECIMAL(38,0)) * si_s AS DOUBLE)"
-        f"            * CAST({m} * sj_q"
-        f"                   - CAST(sj_s AS DECIMAL(38,0)) * sj_s"
-        f"                   AS DOUBLE))))) END"
-    )
-    dists = (
-        pw.join(F.broadcast(si), F.col("si_i") == F.col("i"))
-        .join(F.broadcast(sj), F.col("sj_i") == F.col("i") + F.col("d"))
-        .select("i", (F.col("i") + F.col("d")).alias("j"), dist_expr.alias("dist"))
-        .localCheckpoint(eager=False)
-    )
-    _MP_DISTS_CACHE[key] = (dists, hourly)
-    return dists, hourly
+        hourly.sort(key=lambda r: (r.h is not None, r.h))
+        _MP_ROWS_CACHE[key] = _mp_kernel([r.cents for r in hourly])
+    return _MP_ROWS_CACHE[key]
+
+
+def _mp_kernel(cents: list, m: int = MP_WINDOW_H, excl: int = MP_EXCL_H):
+    """One exact STOMP pass (Zhu et al., ICDM 2016) over an hourly series
+    (None = NULL cents), diagonal by diagonal, in O(n^2) time and O(n)
+    memory. Returns three row lists with 1-based indices, as the oracles
+    define them: the self-profile (i, mp, nn_idx) by i, the AB-join
+    (j, mp, nn_i) by j and the motif top-k (i, j, dist) by (dist, i, j).
+
+    Window sums S, Q and P are prefix-sum differences of exact integers
+    (int64 while 4 m^2 max|v|^2 < 2^62, else Python ints; NULL counts 0),
+    each cast to double once; the distance is the oracle's expression in
+    its order. A window with no non-NULL value (NULL S) has m*Q - S^2 = 0
+    here, so NULL distances as for any zero-variance window; a pair with
+    no non-NULL product has a NULL P, which greatest(0, ..) turns into
+    0.0. NULL distances are NaN here and never win a comparison. Ties go
+    to the smallest index: within a diagonal the i-side partner (i + d,
+    growing with d) replaces only on <, the j-side partner (j - d,
+    shrinking with d) on <=."""
+    import numpy as np
+
+    n = len(cents)
+    nsub = n - m + 1
+    big = max((abs(c) for c in cents if c is not None), default=0)
+    dt = np.int64 if 4 * m * m * big * big < 2**62 else object
+    v = np.array([0 if c is None else c for c in cents], dtype=dt)
+    ok = np.array([c is not None for c in cents], dtype=np.int64)
+
+    def win(x):  # sums over every length-m window (exact mod 2^64)
+        c = np.zeros(len(x) + 1, dtype=x.dtype)
+        np.cumsum(x, out=c[1:])
+        return c[m:] - c[:-m]
+
+    mp = np.full(max(nsub, 0), np.inf)
+    nn = np.full(max(nsub, 0), -1)
+    mpj, nni = mp.copy(), nn.copy()
+    na = n // 2  # AB split: i <= na - m + 1 and j >= na + 1, 1-based
+    top = (np.empty(0), np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
+    s = win(v)
+    var = m * win(v * v) - s * s
+    defined = var > 0
+    vf = var.astype(np.float64)
+    for d in range(excl, nsub):
+        n_d = nsub - d
+        i = np.arange(n_d)
+        j = i + d
+        num = (m * win(v[: n - d] * v[d:]) - s[:n_d] * s[d:]).astype(np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            dist = np.sqrt(np.maximum(
+                0, (2.0 * m) * (1.0 - num / np.sqrt(vf[:n_d] * vf[d:]))
+            ))
+        dist[win(ok[: n - d] * ok[d:]) == 0] = 0.0
+        dist[~(defined[:n_d] & defined[d:])] = np.nan
+        up = dist < mp[:n_d]
+        mp[:n_d][up], nn[:n_d][up] = dist[up], j[up]
+        up = dist <= mp[d:]
+        mp[d:][up], nn[d:][up] = dist[up], i[up]
+        up = (i <= na - m) & (j >= na) & (dist <= mpj[d:])
+        mpj[j[up]], nni[j[up]] = dist[up], i[up]
+        up = ~np.isnan(dist)
+        td, ti, tj = (np.concatenate(x) for x in zip(top, (dist[up], i[up], j[up])))
+        keep = np.lexsort((tj, ti, td))[:MOTIF_TOP_K]
+        top = (td[keep], ti[keep], tj[keep])
+
+    def rows(best, idx):  # (k, best[k], idx[k]) where a neighbour exists, 1-based
+        k = np.flatnonzero(idx >= 0)
+        return list(zip((k + 1).tolist(), best[k].tolist(), (idx[k] + 1).tolist()))
+
+    motif = list(zip((top[1] + 1).tolist(), (top[2] + 1).tolist(), top[0].tolist()))
+    return rows(mp, nn), rows(mpj, nni), motif
 
 
 @register(
@@ -4721,24 +4692,19 @@ def timeseries_matrix_profile_join(spark: SparkSession, sf_dir: str) -> DataFram
     diagonal d >= m > the self-profile's m/2 band, so the pairs are a
     SUBSET of the shared distance frame).
 
-    Exactness/scale shape: consumes the SAME cached pairwise distance
-    frame as timeseries_matrix_profile (_mp_dists — running both pays
-    the O(n^2) pass once), then one filter and one partial-combinable
-    min(struct(dist, i)) per j (_mp_argmin). Split point is the series
-    midpoint (max(i) DIV 2) — deterministic, calendar-derived. All
-    determinism properties inherit from the base frame (exact integer
+    Exactness/scale shape: a by-product of the SAME driver-side STOMP
+    pass as timeseries_matrix_profile (_mp_rows/_mp_kernel: one
+    distributed hourly aggregate, then O(n^2) time and O(n) memory in
+    the n hours spanned, independent of event volume; running both pays
+    the pass once). Split point is the series midpoint (max(i) DIV 2) —
+    deterministic, calendar-derived; ties go to the smallest i. All
+    determinism properties inherit from the profile (exact integer
     sufficient statistics, one exact->double cast, zero-variance
     subsequences NULL out).
     """
-    dists, hourly = _mp_dists(spark, sf_dir)
-    na = hourly.count() // 2  # i is a row_number: count = max(i)
-    ab = dists.filter(
-        (F.col("i") <= na - MP_WINDOW_H + 1) & (F.col("j") >= na + 1)
-    )
-    return (
-        _mp_argmin(ab, "j", "i", "nn_i")
-        .select("j", F.round("mp", 6).alias("mpj_dist"), "nn_i")
-        .orderBy("j")
+    _profile, ab, _motif = _mp_rows(spark, sf_dir)
+    return local_frame(spark, ab, "j bigint, mp double, nn_i bigint").select(
+        "j", F.round("mp", 6).alias("mpj_dist"), "nn_i"
     )
 
 
@@ -4772,20 +4738,17 @@ def timeseries_motif_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal-shape discovery. Exclusion zone and window inherit from
     the profile family.
 
-    Exactness/scale shape: a pure integer top-k over the SAME cached
-    pairwise-distance frame as timeseries_matrix_profile /
-    _join (_mp_dists — the third consumer of one O(n^2) pass).
-    Distances are bit-identical doubles on both engines (exact integer
-    sufficient statistics, one cast each), so ORDER BY dist with the
-    (i, j) tie-break selects the identical pair set; TakeOrderedAndProject
-    keeps the top-k a partial-combinable aggregate, never a global sort.
+    Exactness/scale shape: the third by-product of the one driver-side
+    STOMP pass shared with timeseries_matrix_profile / _join
+    (_mp_rows/_mp_kernel: one distributed hourly aggregate, then O(n^2)
+    time and O(n) memory in the n hours spanned, independent of event
+    volume). Distances are bit-identical doubles on both engines (exact
+    integer sufficient statistics, one cast each), so the running top-k
+    on (dist, i, j) selects the identical pair set in the oracle's order.
     """
-    dists, _hourly = _mp_dists(spark, sf_dir)
-    return (
-        dists.filter(F.col("dist").isNotNull())
-        .orderBy("dist", "i", "j")
-        .limit(MOTIF_TOP_K)
-        .select("i", "j", F.round("dist", 6).alias("dist"))
+    _profile, _ab, motif = _mp_rows(spark, sf_dir)
+    return local_frame(spark, motif, "i bigint, j bigint, dist double").select(
+        "i", "j", F.round("dist", 6).alias("dist")
     )
 
 
@@ -4827,17 +4790,16 @@ def timeseries_discord_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant) has an undefined profile value and drops out before the
     top-k on both engines.
 
-    Exactness/scale shape: the FOURTH consumer of the one cached
-    O(n^2) pairwise pass (_mp_dists — profile, AB-join, motif top-k,
-    discord top-k all ride the same frame); distances are bit-identical
-    doubles (exact integer sufficient statistics, one cast each), so
-    the shared argmin (_mp_self_profile: smallest j on ties) and ORDER
-    BY mp DESC with the i tie-break select the identical rows; the top-k
-    plans as TakeOrderedAndProject over the subsequence-sized mp frame.
+    Exactness/scale shape: the top-k of the self-profile from the one
+    driver-side STOMP pass (_mp_rows/_mp_kernel: one distributed hourly
+    aggregate, then O(n^2) time and O(n) memory in the n hours spanned,
+    independent of event volume); distances are bit-identical doubles
+    (exact integer sufficient statistics, one cast each), so the argmin
+    (smallest j on ties) and the (mp DESC, i) order select the identical
+    rows.
     """
-    return (
-        _mp_self_profile(spark, sf_dir)
-        .orderBy(F.col("mp").desc(), F.col("i"))
-        .limit(DISCORD_TOP_K)
-        .select("i", F.round("mp", 6).alias("mp_dist"), "nn_idx")
+    profile, _ab, _motif = _mp_rows(spark, sf_dir)
+    top = sorted(profile, key=lambda r: (-r[1], r[0]))[:DISCORD_TOP_K]
+    return local_frame(spark, top, "i bigint, mp double, nn_idx bigint").select(
+        "i", F.round("mp", 6).alias("mp_dist"), "nn_idx"
     )

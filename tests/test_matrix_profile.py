@@ -16,7 +16,10 @@ per hour, so the hourly compression reproduces each series verbatim:
   an AB-join with no reference subsequence at all;
 - a block of hours whose values are all NULL: NULL cents, so a window's
   cross product can be a sum over no value (NULL, which greatest(0, ..)
-  turns into a 0.0 distance on both engines).
+  turns into a 0.0 distance on both engines);
+- hourly cents around 10^12 that spread as widely: window variances
+  (m*Q - S^2) past int64, so the driver-side kernel takes its Python-int
+  path (int64 wrap-around stays exact only while the result fits).
 """
 
 from __future__ import annotations
@@ -58,6 +61,9 @@ SERIES = {
     "one_hour_past_window_plus_exclusion": _day(3)
     + _day(4)[: MP_EXCL_H + 1],
     "null_hours": _day(1) + [None] * 30 + _day(2) + _day(1),
+    "huge_cents": [
+        10**12 + 10**9 * c for c in _day(5) + _day(6) + _day(5) + _day(7)
+    ],
 }
 
 

@@ -167,23 +167,30 @@ def test_median_band_isolation_single_shuffle(spark, sf_dir):
     assert "partial_count" in plan, plan
 
 
-def test_matrix_profile_argmin_is_one_aggregate_no_join_back(spark, sf_dir):
-    """The profile's argmin is ONE min(struct(dist, j)) per i over the
-    checkpointed pair frame: no min + broadcast join-back onto the
-    two-directional pair union, hence no join at all and a single hash
-    exchange (the range exchange is the final ORDER BY)."""
-    plan = _executed(REGISTRY["timeseries_matrix_profile"].fn(spark, sf_dir))
-    assert "Join" not in plan, plan
-    assert len(re.findall(r"(?<!partial_)min\(struct\(dist", plan)) == 1, plan
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+MP_KEYS = (
+    "timeseries_matrix_profile",
+    "timeseries_matrix_profile_join",
+    "timeseries_motif_topk",
+    "timeseries_discord_topk",
+)
+
+
+def test_matrix_profile_family_plans_are_local_table_scans(spark, sf_dir):
+    """The family's rows come from one driver-side pass and return as an
+    Arrow-built LocalTableScan: no parallelize RDD (the list form of
+    createDataFrame), no window, no join left in any of the four plans."""
+    for key in MP_KEYS:
+        plan = _executed(REGISTRY[key].fn(spark, sf_dir))
+        assert "LocalTableScan" in plan, (key, plan)
+        for op in ("ExistingRDD", "Window", "Join"):
+            assert op not in plan, (key, plan)
 
 
 def test_matrix_profile_cold_build_job_budget(spark, sf_dir, tmp_path):
     """A cold timeseries_matrix_profile (fresh fixture path, so the
-    shared pair-frame cache misses) runs at most 10 jobs; a min +
-    join-back argmin plus an eager series-length collect in the shared
-    build made it 14. The sibling motif top-k then reads the cached
-    frame in one."""
+    family's result cache misses) runs at most 5 jobs: the hourly
+    aggregate and its collect, nothing per pair. The sibling motif top-k
+    then reads the cached rows and runs none."""
     import os
 
     (tmp_path / "events.parquet").symlink_to(
@@ -200,5 +207,5 @@ def test_matrix_profile_cold_build_job_budget(spark, sf_dir, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs["timeseries_matrix_profile"] <= 10, jobs
-    assert jobs["timeseries_motif_topk"] == 1, jobs
+    assert jobs["timeseries_matrix_profile"] <= 5, jobs
+    assert jobs["timeseries_motif_topk"] == 0, jobs

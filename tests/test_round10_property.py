@@ -224,32 +224,60 @@ def _mp_twin(cents: np.ndarray, m: int, excl: int):
     return out
 
 
+def _cpp_round6(x: float) -> float:
+    """DuckDB's round(x, 6) on a double: std::round(x * 1e6) / 1e6, with
+    std::round's half-away-from-zero on the scaled value."""
+    import math
+
+    y = abs(x * 1e6)
+    r = math.floor(y)
+    return math.copysign(r + (y - r >= 0.5), x) / 1e6
+
+
 @settings(max_examples=15, deadline=None)
 @given(
     vals=st.lists(st.integers(0, 50), min_size=40, max_size=80),
+    null_block=st.tuples(st.integers(0, 79), st.integers(0, 40)),
 )
-@example(vals=[0] * 40)  # constant series: zero-variance subsequences
-def test_matrix_profile_oracle_random_series(vals):
+@example(vals=[0] * 40, null_block=(0, 0))  # constant series: zero-variance subsequences
+def test_matrix_profile_oracle_random_series(vals, null_block):
     """Random integer series, one event per hour, so the oracle's hourly
     compression reproduces the series verbatim — covers constant
     subsequences (zero variance -> excluded via NULL on both sides),
-    near-duplicates (the greatest(0,..) clip), and short series."""
+    near-duplicates (the greatest(0,..) clip), and short series. The
+    driver-side kernel (_mp_kernel) must equal the oracle's mp_dist and
+    nn_idx exactly on the series and on a copy with a block of NULL
+    hours (``null_block`` = (start, length)), no Spark involved."""
     from go_batch_processor_spark.operators.timeseries import (
         MP_EXCL_H,
         MP_WINDOW_H,
+        _mp_kernel,
     )
 
-    ts = pd.date_range("2024-01-01", periods=len(vals), freq="h")
-    df = pd.DataFrame({"ts": ts, "value": [v / 100.0 for v in vals]})
-    con = duckdb.connect()
-    con.register("ev_src", df)
-    con.sql("CREATE VIEW events AS SELECT * FROM ev_src")
-    out = con.sql(REGISTRY["timeseries_matrix_profile"].oracle).df()
+    def oracle(series):
+        ts = pd.date_range("2024-01-01", periods=len(series), freq="h")
+        df = pd.DataFrame(
+            {"ts": ts, "value": [None if v is None else v / 100.0 for v in series]}
+        )
+        con = duckdb.connect()
+        con.register("ev_src", df)
+        con.sql("CREATE VIEW events AS SELECT * FROM ev_src")
+        out = con.sql(REGISTRY["timeseries_matrix_profile"].oracle).df()
+        con.close()
+        return [(int(r.i), float(r.mp_dist), int(r.nn_idx)) for r in out.itertuples()]
+
+    out = oracle(vals)
     twin = _mp_twin(np.array(vals, dtype=np.int64), MP_WINDOW_H, MP_EXCL_H)
-    got = {int(r.i): r.mp_dist for _, r in out.iterrows()}
+    got = {i: d for i, d, _ in out}
     assert set(got) == set(twin)
     for i, d in twin.items():
         assert got[i] == pytest.approx(d, abs=1e-4), i
+
+    lo, size = null_block
+    nulled = [None if lo <= k < lo + size else v for k, v in enumerate(vals)]
+    for series, want in ((vals, out), (nulled, oracle(nulled))):
+        profile, _ab, _motif = _mp_kernel(series)
+        assert [(i, _cpp_round6(mp), nn) for i, mp, nn in profile] == want
 
 
 # -- Holt grid --------------------------------------------------------------

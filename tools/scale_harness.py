@@ -131,7 +131,7 @@ TIER2: dict[str, tuple[float, str]] = {
     "search_hybrid_rrf": (1.2, "two top-k rank lists + RRF merge"),
     "timeseries_ses_grid_search": (1.0, "calendar-bounded daily fold"),
     "timeseries_kalman_filter": (1.0, "calendar-bounded driver fold"),
-    "timeseries_matrix_profile": (1.0, "calendar-bounded banded self-join"),
+    "timeseries_matrix_profile": (1.0, "calendar-bounded driver STOMP pass"),
     "timeseries_stl_loess": (1.0, "calendar-bounded loess"),
     "stats_benjamini_hochberg": (1.0, "bounded hypothesis-count rollup"),
     "stats_cucconi_test": (1.0, "compressed-domain rank stats"),
