@@ -46,11 +46,17 @@ def _drop(cache: dict, key) -> None:
     members = val if isinstance(val, tuple) else (val,)
     for m in members:
         if hasattr(m, "unpersist"):
-            try:
-                m.unpersist(blocking=False)
-                m._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass  # stopped session / derived plan / released blocks
+            release(m)
+
+
+def release(df) -> None:
+    """Best-effort unpersist of ``df`` and of the checkpointed RDD under
+    its LogicalRDD leaf, if it is a localCheckpoint'd frame (see _drop)."""
+    try:
+        df.unpersist(blocking=False)
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass  # stopped session / derived plan / released blocks
 
 
 def evict_stale(cache: dict, current_app_id: str, cap: int = 8) -> None:

@@ -792,16 +792,16 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     subgraph where everyone has >= k neighbors (the standard
     dense-community / spam-ring screen).
 
-    Scale shape: each round is one degree aggregate + two anti-joins on
-    the node key (all partial-combinable / co-partitioned; no
-    broadcast hint — the doomed-node set starts large and AQE picks
-    the strategy), with per-round persists swapped generation-to-
-    generation and a localCheckpoint truncating lineage at exit (the
-    BFS idiom). Convergence needs <= diameter-ish rounds in practice;
-    the driver sees one integer per round. At 100 TB the refinement is
-    batched peeling (delete everything below k in one round rather
-    than recomputing exactly — same fixpoint, fewer rounds), which is
-    exactly what this loop does.
+    Scale shape: each round is one persisted degree aggregate, probed by
+    counting its below-k nodes, and two anti-joins on the node key
+    (partial-combinable / co-partitioned; the doomed set is a tiny
+    broadcast side). The probe's aggregate of the fixpoint round IS the
+    answer, so it returns through one localCheckpoint and nothing is
+    recomputed; on the fixtures no node starts below k at sf0.01 and
+    sf0.1, so the loop stops in round 0. The driver sees one integer per
+    round. At 100 TB the refinement is batched peeling (delete
+    everything below k in one round rather than recomputing exactly —
+    same fixpoint, fewer rounds), which is exactly what this loop does.
 
     ORACLED (r11, upgraded from rows-only): the peeling loop carries a
     FIXED iteration cap (K_CORE_MAX_ITERS), so the oracle unrolls the
@@ -816,56 +816,57 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_graph.py still pins the node set against an independent
     pandas peeling twin and asserts the degree invariant.
     """
-    core = _k_core_peel(
+    return _k_core_peel(
         spark, interaction_edges(spark, sf_dir), K_CORE, K_CORE_MAX_ITERS
-    )
-    return (
-        core.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(
-            F.col("src").alias("node"),
-            F.when(F.col("src") % 2 == 0, "user").otherwise("item").alias("kind"),
-            F.col("core_degree").cast("bigint").alias("core_degree"),
-        )
-        .localCheckpoint()
     )
 
 
 def _k_core_peel(
     spark: SparkSession, edges: DataFrame, k: int, max_iters: int
 ) -> DataFrame:
-    """Iterative k-core peeling over an explicit symmetric edge list;
-    returns the surviving (src, dst) subgraph, localCheckpoint'd.
-    Extracted (r10, r9 verdict item 6) so adversarial-fixture property
-    tests — cliques with pendant tails, components that peel away
-    entirely, isolated stars — drive the real peeling loop."""
+    """Iterative k-core peeling over an explicit symmetric (src, dst) edge
+    list; returns the core's (node, kind, core_degree) rows, kind from
+    the id namespace of interaction_edges, localCheckpoint'd. Extracted
+    (r10, r9 verdict item 6) so adversarial-fixture property tests —
+    cliques with pendant tails, components that peel away entirely,
+    isolated stars — drive the real peeling loop.
+
+    Each round persists its degree aggregate; the probe's count of
+    below-k nodes materialises it, and a materialised InMemoryRelation
+    keeps real size statistics, so the doomed set stays the broadcast
+    side of the anti-joins (a checkpointed LogicalRDD loses them: the
+    r14 negative). At the fixpoint that same aggregate is the result.
+    Every 4th round checkpoints the edge list to truncate lineage; those
+    copies and every persisted frame are released once the result's
+    checkpoint is materialised (or the loop fails)."""
     from pyspark import StorageLevel
 
-    cur = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    generations = [cur]
-    converged = False
+    from go_batch_processor_spark.dfcache import release
+
+    cur = edges
+    persisted = []
+    checkpoints = []
     try:
         for it in range(max_iters):
-            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+            deg = (
+                cur.groupBy("src")
+                .agg(F.count(F.lit(1)).alias("d"))
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            persisted.append(deg)
             bad = deg.filter(F.col("d") < k).select(F.col("src").alias("n"))
-            # r14 NEGATIVE (measured, reverted): fusing this probe with a
-            # bad-materializing _ckpt_count (the Brandes §4 trick) was
-            # 1.157x SLOWER here (3.36 -> 3.89 s A/B) — unlike the BFS
-            # frontier, `bad` is a tiny BROADCAST side of the two
-            # anti-joins below, and a checkpointed LogicalRDD forfeits
-            # the aggregate's size estimate, while the recompute the
-            # count() probe "wastes" is absorbed by exchange reuse.
             if bad.count() == 0:
-                converged = True
-                break
-            nxt = (
+                return deg.select(
+                    F.col("src").alias("node"),
+                    F.when(F.col("src") % 2 == 0, "user").otherwise("item").alias("kind"),
+                    F.col("d").cast("bigint").alias("core_degree"),
+                ).localCheckpoint()
+            cur = (
                 cur.join(bad, cur["src"] == bad["n"], "left_anti")
                 .join(bad.withColumnRenamed("n", "m"), cur["dst"] == F.col("m"), "left_anti")
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            # the PERSISTED frame goes on the cleanup list even when the
-            # loop continues from its checkpointed alias below
-            generations.append(nxt)
+            persisted.append(cur)
             if (it + 1) % 4 == 0:
                 # lineage hygiene (r12): each round's plan nests the
                 # previous round's TWICE (bad is derived from cur), so
@@ -874,32 +875,22 @@ def _k_core_peel(
                 # found by the r12 pathological-path test, latent at the
                 # 30-round cap. Truncate every 4th round (the
                 # dedup_cluster_components idiom).
-                # Retention note (ADVICE r12): the checkpointed alias is
-                # deliberately NOT added to `generations` — unpersisting
-                # a checkpoint destroys it while later rounds still read
-                # it. A deep peel therefore retains ~max_iters/4 (<= 7
-                # at the 30-round cap) checkpointed edge-list copies
-                # until driver GC; bounded and acceptable. For an
-                # unbounded-iteration caller, track these and unpersist
-                # AFTER the return value is materialized.
-                nxt = nxt.localCheckpoint(eager=True)
-            cur = nxt
-        if not converged:
-            # The peeling fixpoint was NOT reached inside the iteration
-            # cap — the returned subgraph would be a superset of the
-            # true k-core. Fail loudly rather than return a wrong answer
-            # silently (ADVICE r5). The cap exists only as a runaway
-            # guard; real graphs converge in <= diameter-ish rounds.
-            raise RuntimeError(
-                f"graph_k_core: no fixpoint after {max_iters} "
-                f"peeling rounds (k={k}); raise the iteration cap"
-            )
-        return cur.localCheckpoint()
+                cur = cur.localCheckpoint(eager=True)
+                checkpoints.append(cur)
+        # The peeling fixpoint was NOT reached inside the iteration cap —
+        # the result would be a superset of the true k-core. Fail loudly
+        # rather than return a wrong answer silently (ADVICE r5). The cap
+        # exists only as a runaway guard; real graphs converge in
+        # <= diameter-ish rounds.
+        raise RuntimeError(
+            f"graph_k_core: no fixpoint after {max_iters} "
+            f"peeling rounds (k={k}); raise the iteration cap"
+        )
     finally:
-        for g in generations:
+        for g in persisted:
             g.unpersist(blocking=False)
-
-
+        for c in checkpoints:
+            release(c)
 
 
 _MODULARITY_ORACLE = _LPA_CTE_PREFIX + """,

@@ -916,103 +916,98 @@ def ml_logreg_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed binary logistic regression trained with Newton/IRLS:
     P(l_returnflag = 'R') ~ sigmoid(b0 + b . [quantity, discount, tax]).
 
-    Each iteration is ONE whole-stage-codegen aggregate collecting the
-    Newton sufficient statistics with the CURRENT beta as literals —
-    gradient X^T (y - p) (d sums) and Hessian X^T diag(p(1-p)) X (d(d+1)/2
-    sums), where p = sigmoid(x . beta) is computed per-row JVM-side.
-    The d x d solve is driver-local. No Python touches the data path at
-    all (cf. the Arrow kernels k-means needs for 64-dim argmin — at d=4
-    codegen wins). Scale: iters scans, O(d^2) shuffled state per scan,
-    O(d^2) driver state; the MLlib LogisticRegression shape.
+    Each iteration solves the d x d Newton system for the gradient
+    X^T (y - p) and the Hessian X^T diag(p(1-p)) X at the current beta,
+    p = sigmoid(x . beta). Scale: one scan and one cell-sized collect,
+    then O(iters * cells) driver work; unbounded feature grids would
+    move the sums back into a distributed aggregate (the MLlib shape).
 
     ORACLED (r11, upgraded from rows-only — the platt/svm/cox cell
     precedent): the feature grids are 2-decimal-bounded, so the fact
     table compresses to ~10^4 (qty, disc, tax, label, count) cells in
-    ONE partial-combinable groupBy and the LOGREG_ITERS IRLS
-    iterations fold over the collected cells driver-side — one scan
-    instead of nine. The sigmoid runs through math.exp (glibc
-    bit-identical to DuckDB's exp; the JVM F.exp left the path) and
-    each 4x4 Newton solve evaluates the SAME Cramer expression strings
-    the oracle's CTE chain executes (_logreg_cramer_stages — the OLS
-    shared-expression contract, replacing np.linalg.solve whose
-    pivoted LU has no SQL twin). Per-cell sum ordering noise (~1e-16)
-    collapses under IRLS contraction below the shared floor-round
-    grain. tests/test_ml.py still pins coefficients and converged
-    log-loss against a numpy IRLS twin.
+    ONE partial-combinable groupBy, collected through Arrow; the
+    LOGREG_ITERS IRLS iterations fold over them driver-side
+    (_irls_fold, glibc exp/log) — one scan instead of nine. Each 4x4
+    Newton solve evaluates the SAME Cramer expression strings the
+    oracle's CTE chain executes (_logreg_cramer_stages — the OLS
+    shared-expression contract; np.linalg.solve's pivoted LU has no SQL
+    twin). Per-cell sum-order noise (~1e-16) collapses under IRLS
+    contraction below the floor-round grain. tests/test_ml.py still
+    pins coefficients and log-loss against a numpy IRLS twin.
     """
-    import math
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_quantity") * 100).cast("bigint").alias("u1"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("u2"),
         F.round(F.col("l_tax") * 100).cast("bigint").alias("u3"),
         (F.col("l_returnflag") == "R").cast("int").alias("y"),
     )
-    raw = sorted(
-        (int(r.u1), int(r.u2), int(r.u3), int(r.y), int(r.cnt))
-        for r in li.groupBy("u1", "u2", "u3", "y")
+    cells = (
+        li.groupBy("u1", "u2", "u3", "y")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .collect()
+        .toArrow()
     )
-    cells = [
-        (u1 / 100.0, u2 / 100.0, u3 / 100.0, float(y), cnt)
-        for u1, u2, u3, y, cnt in raw
-    ]
-    n = sum(c[4] for c in cells)
-    beta = [0.0, 0.0, 0.0, 0.0]
-    stages = _logreg_cramer_stages()
-    exp = math.exp
-    for _ in range(LOGREG_ITERS):
-        # r13 optimization: unrolled local-float accumulators replace the
-        # f-string-keyed dict (14 f-string constructions per cell per
-        # iteration dominated the fold — measured 65 ms -> 12 ms per
-        # iteration at sf0.1 cell counts). Each accumulator receives the
-        # SAME per-cell terms in the SAME cell order as before, so every
-        # sum is bit-identical (only the interleaving across DISTINCT
-        # accumulators changed, which IEEE addition never sees).
-        g0 = g1 = g2 = g3 = 0.0
-        h00 = h01 = h02 = h03 = 0.0
-        h11 = h12 = h13 = h22 = h23 = h33 = 0.0
-        b0, b1, b2, b3 = beta
-        for x1, x2, x3, yd, cnt in cells:
-            xb = ((b0 + b1 * x1) + b2 * x2) + b3 * x3
-            p = 1.0 / (1.0 + exp(-xb))
-            w = p * (1.0 - p)
-            r = yd - p
-            g0 += cnt * (1.0 * r)
-            h00 += cnt * ((w * 1.0) * 1.0)
-            h01 += cnt * ((w * 1.0) * x1)
-            h02 += cnt * ((w * 1.0) * x2)
-            h03 += cnt * ((w * 1.0) * x3)
-            g1 += cnt * (x1 * r)
-            h11 += cnt * ((w * x1) * x1)
-            h12 += cnt * ((w * x1) * x2)
-            h13 += cnt * ((w * x1) * x3)
-            g2 += cnt * (x2 * r)
-            h22 += cnt * ((w * x2) * x2)
-            h23 += cnt * ((w * x2) * x3)
-            g3 += cnt * (x3 * r)
-            h33 += cnt * ((w * x3) * x3)
-        ns = {
-            "g_0": g0, "g_1": g1, "g_2": g2, "g_3": g3,
-            "h_0_0": h00, "h_0_1": h01, "h_0_2": h02, "h_0_3": h03,
-            "h_1_1": h11, "h_1_2": h12, "h_1_3": h13,
-            "h_2_2": h22, "h_2_3": h23, "h_3_3": h33,
-        }
-        ns = _eval_stages(stages, ns)
-        for k in range(4):
-            beta[k] = beta[k] + ns[f"b{k}"]
-    acc = 0.0
-    for x1, x2, x3, yd, cnt in cells:
-        xb = ((beta[0] + beta[1] * x1) + beta[2] * x2) + beta[3] * x3
-        p = 1.0 / (1.0 + math.exp(-xb))
-        acc += cnt * (-(yd * math.log(p) + (1.0 - yd) * math.log(1.0 - p)))
-    ll = acc / n
+    if any(c.null_count for c in cells.columns):
+        raise TypeError("ml_logreg_irls: a NULL feature or label cell")
+    beta, ll = _irls_fold(*(c.to_numpy() for c in cells.columns))
     terms = ["intercept", *LOGREG_FEATURES]
     out = [(t, _round6_floor(b)) for t, b in zip(terms, beta)] + [
         ("log_loss", _round6_floor(ll))
     ]
     return local_frame(spark, out, "term string, value double")
+
+
+def _seq_sum(a) -> float:
+    """``acc = 0.0; for t in a: acc += t`` without the Python loop: a
+    sequential cumulative sum seeded with 0.0 (so an all -0.0 input sums
+    to 0.0 as the loop does). np.sum is pairwise and rounds differently."""
+    import numpy as np
+
+    return float(np.cumsum(np.concatenate(([0.0], a)))[-1])
+
+
+def _irls_fold(u1, u2, u3, y, cnt) -> tuple[list[float], float]:
+    """LOGREG_ITERS Newton/IRLS steps from beta = 0 and the final mean
+    log-loss over (u1, u2, u3, y, cnt) integer cells (features in
+    hundredths), given as arrays in any order; returns (beta, log_loss).
+
+    Bit-identical to a scalar loop over the cells in Python tuple order
+    (np.lexsort, last key first): each per-cell term is the same
+    element-wise expression in the same order, each sum a _seq_sum, and
+    exp/log run through math.* (glibc, the oracle's contract) since
+    np.exp and np.log round differently on about a fifth of inputs."""
+    import math
+
+    import numpy as np
+
+    cols = [np.asarray(a, dtype=np.int64) for a in (u1, u2, u3, y, cnt)]
+    order = np.lexsort(cols[::-1])
+    u1, u2, u3, y, cnt = (a[order] for a in cols)
+    x = (1.0, u1 / 100.0, u2 / 100.0, u3 / 100.0)
+    yd = y.astype(np.float64)
+
+    def glibc(f, a):
+        return np.fromiter(map(f, a.tolist()), np.float64, len(a))
+
+    def prob(b):
+        xb = ((b[0] + b[1] * x[1]) + b[2] * x[2]) + b[3] * x[3]
+        return 1.0 / (1.0 + glibc(math.exp, -xb))
+
+    beta = [0.0, 0.0, 0.0, 0.0]
+    stages = _logreg_cramer_stages()
+    for _ in range(LOGREG_ITERS):
+        p = prob(beta)
+        w = p * (1.0 - p)
+        r = yd - p
+        ns = {}
+        for i in range(4):
+            ns[f"g_{i}"] = _seq_sum(cnt * (x[i] * r))
+            for j in range(i, 4):
+                ns[f"h_{i}_{j}"] = _seq_sum(cnt * ((w * x[i]) * x[j]))
+        ns = _eval_stages(stages, ns)
+        beta = [beta[k] + ns[f"b{k}"] for k in range(4)]
+    p = prob(beta)
+    loss = cnt * (-(yd * glibc(math.log, p) + (1.0 - yd) * glibc(math.log, 1.0 - p)))
+    return beta, _seq_sum(loss) / int(cnt.sum())
 
 
 GMM_K = 4

@@ -4570,8 +4570,9 @@ _MP_ROWS_CACHE: dict = {}
 def _mp_rows(spark: SparkSession, sf_dir: str):
     """(profile, ab_join, motif) row lists of the fixture's hourly series:
     the one distributed job is the hourly sum(round(value*100)), whose
-    rows are ordered as row_number() OVER (ORDER BY h) numbers them
-    (ascending, NULLS FIRST) and handed to _mp_kernel."""
+    rows are collected through Arrow, ordered as row_number() OVER
+    (ORDER BY h) numbers them (ascending, NULLS FIRST) and handed to
+    _mp_kernel, NULL cents as None."""
     import os
 
     from go_batch_processor_spark.dfcache import evict_stale
@@ -4585,10 +4586,10 @@ def _mp_rows(spark: SparkSession, sf_dir: str):
             ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
             .agg(cents.alias("cents"))
             .select(F.unix_micros("h").alias("h"), "cents")
-            .collect()
+            .toArrow()
+            .sort_by([("h", "ascending")], null_placement="at_start")
         )
-        hourly.sort(key=lambda r: (r.h is not None, r.h))
-        _MP_ROWS_CACHE[key] = _mp_kernel([r.cents for r in hourly])
+        _MP_ROWS_CACHE[key] = _mp_kernel(hourly.column("cents").to_pylist())
     return _MP_ROWS_CACHE[key]
 
 

@@ -172,11 +172,12 @@ def test_k_core_peel_matches_python_twin(spark):
     """k=3 peeling: the chain, star, and triangle components peel away
     ENTIRELY (everything there has degree <= 2 eventually), the K4
     survives exactly after its pendant 44 peels off — and the pendant's
-    removal must not drag 43 (degree drops 4 -> 3, still >= k) with it."""
+    removal must not drag 43 (degree drops 4 -> 3, still >= k) with it.
+    Every surviving node's core degree equals the twin's."""
     from go_batch_processor_spark.operators.graph import _k_core_peel
 
     core = _k_core_peel(spark, _edges_df(spark), 3, 30)
-    got_nodes = {r.src for r in core.collect()}
+    got = {r.node: (r.kind, r.core_degree) for r in core.collect()}
 
     # python twin: iterative peeling on the adjacency
     adj = {n: set(vs) for n, vs in _adj().items()}
@@ -187,12 +188,10 @@ def test_k_core_peel_matches_python_twin(spark):
             for v in adj.pop(n):
                 adj[v].discard(n)
             changed = True
-    assert got_nodes == set(adj) == {40, 41, 42, 43}
-    # degree invariant inside the surviving core
-    deg = defaultdict(int)
-    for r in core.collect():
-        deg[r.src] += 1
-    assert all(d >= 3 for d in deg.values())
+    want = {n: ("user" if n % 2 == 0 else "item", len(vs)) for n, vs in adj.items()}
+    assert got == want
+    assert set(got) == {40, 41, 42, 43}
+    assert all(d == 3 for _, d in got.values())
 
 
 def test_k_core_noncovergence_past_cap_fails_loud(spark):
@@ -214,6 +213,26 @@ def test_k_core_noncovergence_past_cap_fails_loud(spark):
         _k_core_peel(spark, edges, 2, 3)
     # ...and a cap past the fixpoint converges: the path fully dissolves
     assert _k_core_peel(spark, edges, 2, 30).count() == 0
+
+
+def test_k_core_peel_releases_its_checkpoints(spark):
+    """The 20-edge path with k=2 peels for ~10 rounds, so the loop takes
+    lineage checkpoints after rounds 4 and 8. Once the result is
+    materialised, the only persistent RDD the peel leaves behind is the
+    result's own checkpoint: no edge-list copy, no round aggregate."""
+    from go_batch_processor_spark.operators.graph import _k_core_peel
+
+    path = [(i, i + 1) for i in range(20)]
+    edges = spark.createDataFrame(
+        [(a, b) for a, b in path] + [(b, a) for a, b in path],
+        "src long, dst long",
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    core = _k_core_peel(spark, edges, 2, 30)
+    left = set(jsc.getPersistentRDDs().keySet()) - before
+    assert left == {core._jdf.queryExecution().analyzed().rdd().id()}
+    assert core.count() == 0
 
 
 def test_k_core_oracle_truncates_identically_below_cap(

@@ -286,6 +286,126 @@ def test_logreg_matches_numpy_irls(spark, sf_dir):
     assert got["log_loss"] < 0.6931
 
 
+def _scalar_irls_twin(raw):
+    """The scalar IRLS fold _irls_fold replaced, kept as its exactness
+    twin: Python tuple order, one float accumulator per sum, math.exp
+    and math.log per cell."""
+    import math
+
+    from go_batch_processor_spark.operators.ml import (
+        LOGREG_ITERS,
+        _eval_stages,
+        _logreg_cramer_stages,
+    )
+
+    cells = [
+        (u1 / 100.0, u2 / 100.0, u3 / 100.0, float(y), cnt)
+        for u1, u2, u3, y, cnt in sorted(raw)
+    ]
+    n = sum(c[4] for c in cells)
+    beta = [0.0, 0.0, 0.0, 0.0]
+    stages = _logreg_cramer_stages()
+    exp = math.exp
+    for _ in range(LOGREG_ITERS):
+        g0 = g1 = g2 = g3 = 0.0
+        h00 = h01 = h02 = h03 = 0.0
+        h11 = h12 = h13 = h22 = h23 = h33 = 0.0
+        b0, b1, b2, b3 = beta
+        for x1, x2, x3, yd, cnt in cells:
+            xb = ((b0 + b1 * x1) + b2 * x2) + b3 * x3
+            p = 1.0 / (1.0 + exp(-xb))
+            w = p * (1.0 - p)
+            r = yd - p
+            g0 += cnt * (1.0 * r)
+            h00 += cnt * ((w * 1.0) * 1.0)
+            h01 += cnt * ((w * 1.0) * x1)
+            h02 += cnt * ((w * 1.0) * x2)
+            h03 += cnt * ((w * 1.0) * x3)
+            g1 += cnt * (x1 * r)
+            h11 += cnt * ((w * x1) * x1)
+            h12 += cnt * ((w * x1) * x2)
+            h13 += cnt * ((w * x1) * x3)
+            g2 += cnt * (x2 * r)
+            h22 += cnt * ((w * x2) * x2)
+            h23 += cnt * ((w * x2) * x3)
+            g3 += cnt * (x3 * r)
+            h33 += cnt * ((w * x3) * x3)
+        ns = {
+            "g_0": g0, "g_1": g1, "g_2": g2, "g_3": g3,
+            "h_0_0": h00, "h_0_1": h01, "h_0_2": h02, "h_0_3": h03,
+            "h_1_1": h11, "h_1_2": h12, "h_1_3": h13,
+            "h_2_2": h22, "h_2_3": h23, "h_3_3": h33,
+        }
+        ns = _eval_stages(stages, ns)
+        for k in range(4):
+            beta[k] = beta[k] + ns[f"b{k}"]
+    acc = 0.0
+    for x1, x2, x3, yd, cnt in cells:
+        xb = ((beta[0] + beta[1] * x1) + beta[2] * x2) + beta[3] * x3
+        p = 1.0 / (1.0 + math.exp(-xb))
+        acc += cnt * (-(yd * math.log(p) + (1.0 - yd) * math.log(1.0 - p)))
+    return beta, acc / n
+
+
+def _random_cells(seed: int, huge_counts: bool = False):
+    """Distinct (u1, u2, u3, y, cnt) cells on lineitem-like grids, in
+    random order. With huge_counts the counts sit just below 2^40 and
+    the smallest cell is (0, 0, .., y=0), whose gradient terms for
+    quantity and discount are 0.0 * (0 - p) = -0.0: the folds start
+    with a negative zero."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(20, 3000))
+    keys = {
+        (int(rng.integers(100, 5001)), int(rng.integers(0, 11)),
+         int(rng.integers(0, 9)), int(rng.integers(0, 2)))
+        for _ in range(n)
+    }
+    if huge_counts:
+        keys.add((0, 0, 3, 0))
+    lo, hi = (2**40 - 2**20, 2**40) if huge_counts else (1, 500)
+    cells = [(*k, int(rng.integers(lo, hi))) for k in keys]
+    rng.shuffle(cells)
+    return cells
+
+
+@pytest.mark.parametrize(
+    "seed,huge", [(s, False) for s in range(12)] + [(100, True), (101, True)]
+)
+def test_irls_fold_is_bit_identical_to_scalar_twin(seed, huge):
+    """_irls_fold (lexsort, element-wise terms, sequential cumsum folds,
+    math.exp/math.log) against the scalar loop: betas and log-loss are
+    hex-equal before the floor rounding, whatever order the cells come
+    in."""
+    from go_batch_processor_spark.operators.ml import _irls_fold
+
+    cells = _random_cells(seed, huge)
+    if huge:
+        first = sorted(cells)[0]
+        assert (first[0], first[1], first[3]) == (0, 0, 0)
+    beta, ll = _irls_fold(*(np.array(c, dtype=np.int64) for c in zip(*cells)))
+    want_beta, want_ll = _scalar_irls_twin(cells)
+    assert [b.hex() for b in beta] == [b.hex() for b in want_beta]
+    assert ll.hex() == want_ll.hex()
+
+
+def test_seq_sum_is_the_left_fold_from_zero():
+    """_seq_sum keeps the scalar fold's rounding and its sign of zero,
+    where pairwise np.sum differs."""
+    from go_batch_processor_spark.operators.ml import _seq_sum
+
+    def fold(a):
+        acc = 0.0
+        for t in a:
+            acc += t
+        return acc
+
+    rng = np.random.default_rng(7)
+    a = rng.standard_normal(4096) * 10.0 ** rng.integers(-8, 8, 4096)
+    assert _seq_sum(a).hex() == fold(a.tolist()).hex()
+    assert np.sum(a).hex() != fold(a.tolist()).hex()
+    assert _seq_sum(np.array([-0.0, -0.0])).hex() == fold([-0.0, -0.0]).hex() == "0x0.0p+0"
+
+
 def test_gmm_matches_numpy_em(spark, sf_dir):
     """The fused-E/M Arrow pass must reproduce a numpy EM with identical
     init and iterations (weights, means, variances, mean log-lik)."""

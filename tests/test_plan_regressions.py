@@ -209,3 +209,45 @@ def test_matrix_profile_cold_build_job_budget(spark, sf_dir, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert jobs["timeseries_matrix_profile"] <= 5, jobs
     assert jobs["timeseries_motif_topk"] == 0, jobs
+
+
+def test_k_core_job_budget_without_peel(spark, tmp_path):
+    """graph_k_core on complete bipartite K8,8 events: every node has
+    degree exactly k = 8, so round 0 is the fixpoint and the probe's
+    degree aggregate is the answer. Measured with the collect: 9 jobs
+    when the edge list was persisted, checkpointed and its aggregate
+    recomputed, 7 when the probe's aggregate is returned."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_batch_processor_spark.operators.graph import K_CORE
+
+    pairs = [(u, i) for u in range(1, K_CORE + 1) for i in range(1, K_CORE + 1)]
+    (tmp_path / "events.parquet").mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(pairs)), pa.int64()),
+                "ts": pa.array(
+                    [1_700_000_000_000_000 + n for n in range(len(pairs))],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([u for u, _ in pairs], pa.int64()),
+                "event_type": pa.array(["view"] * len(pairs)),
+                "value": pa.array([1.0] * len(pairs), pa.float64()),
+                "props": pa.array(['{"k": %d}' % i for _, i in pairs]),
+            }
+        ),
+        str(tmp_path / "events.parquet" / "part-0.parquet"),
+    )
+    sc = spark.sparkContext
+    group = f"plan-regression-k-core-{tmp_path.name}"
+    try:
+        sc.setJobGroup(group, "graph_k_core")
+        rows = REGISTRY["graph_k_core"].fn(spark, str(tmp_path)).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(r.core_degree for r in rows) == [K_CORE] * (2 * K_CORE)
+    assert jobs <= 7, jobs

@@ -113,3 +113,28 @@ def test_fold_doctrine_audit_is_clean():
         cwd=__file__.rsplit("/tests/", 1)[0],
     )
     assert r.returncode == 0, r.stdout + r.stderr
+
+
+def _np_exp_helper(x):
+    import numpy as np
+
+    return np.exp(x)
+
+
+def test_fold_audit_flags_numpy_exp_in_an_oracled_key_helper(capsys):
+    """An oracled key whose same-module helper calls np.exp is flagged:
+    the oracles' exp/ln are glibc's, numpy's kernels round differently."""
+    from go_batch_processor_spark.registry import REGISTRY, _ensure_loaded, register
+    from tools import fold_audit
+
+    _ensure_loaded()
+
+    def fold_audit_probe(spark, sf_dir):
+        return _np_exp_helper(0.0)
+
+    register("fold_audit_probe", oracle="SELECT 1")(fold_audit_probe)
+    try:
+        assert fold_audit.main() == 1
+    finally:
+        del REGISTRY["fold_audit_probe"]
+    assert "FLAG fold_audit_probe: np.exp" in capsys.readouterr().out

@@ -10,6 +10,10 @@ contract; this audit keeps the registry honest:
   non-integer state (no HUGEINT widening anywhere in the oracle).
 - FLAG: Spark source using F.aggregate with a float init (F.lit(0.0) /
   F.lit(1.0)) inside a registered key's function.
+- FLAG: numpy exp/log (np.exp, np.log, np.log1p, np.expm1) in an oracled
+  key's function or in a same-module helper it calls: the oracles'
+  exp/ln are glibc's, which numpy's own kernels do not reproduce bit for
+  bit (they differ on about a fifth of inputs). Use math.* per element.
 - WHITELIST: keys with a driver-green history or rows-only status may
   keep same-ordered folds (documented watchlist in HANDOFF.md).
 
@@ -21,6 +25,7 @@ from __future__ import annotations
 
 import inspect
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -60,6 +65,36 @@ WHITELIST = {
 }
 
 
+NUMPY_TRANSCENDENTAL = re.compile(r"\bnp\.(exp|log|log1p|expm1)\(")
+
+
+def _source_with_helpers(fn) -> str:
+    """Source of the key behind the registry wrapper ``fn`` (its closure's
+    ``fn``) and of every function of the key's module it calls,
+    transitively (names in nested code objects included)."""
+    fn = inspect.getclosurevars(fn).nonlocals.get("fn", fn)
+    mod = inspect.getmodule(fn)
+    seen, todo, out = set(), [fn], []
+    while todo:
+        f = todo.pop()
+        if f in seen:
+            continue
+        seen.add(f)
+        try:
+            out.append(inspect.getsource(f))
+        except (OSError, TypeError):
+            continue
+        codes = [f.__code__]
+        while codes:
+            code = codes.pop()
+            codes.extend(c for c in code.co_consts if inspect.iscode(c))
+            for name in code.co_names:
+                g = getattr(mod, name, None)
+                if inspect.isfunction(g) and g.__module__ == mod.__name__:
+                    todo.append(g)
+    return "\n".join(out)
+
+
 def main() -> int:
     _ensure_loaded()
     bad = []
@@ -78,6 +113,11 @@ def main() -> int:
             "F.lit(0.0)" in src or "F.lit(1.0)" in src
         ):
             bad.append((key, "Spark F.aggregate with float init (oracled)"))
+            continue
+        if spec.oracle:
+            m = NUMPY_TRANSCENDENTAL.search(_source_with_helpers(spec.fn))
+            if m:
+                bad.append((key, f"{m.group(0)[:-1]} in an oracled key (not glibc)"))
     for key, why in bad:
         print(f"FLAG {key}: {why}")
     print(f"audited {len(REGISTRY)} keys, {len(bad)} flags")

@@ -122,7 +122,7 @@ TIER2: dict[str, tuple[float, str]] = {
     "dedup_edit_distance": (2.0, "band all-pairs verifier by design"),
     "dedup_exact": (1.0, "sha2 groupBy"),
     "dedup_cluster_components": (1.0, "iterative CC, linear/round"),
-    "ml_logreg_irls": (1.0, "IRLS codegen aggregate per iteration"),
+    "ml_logreg_irls": (1.0, "one cell groupBy, bounded driver IRLS fold"),
     "ml_naive_bayes_langid": (1.0, "bounded vocab model + scoring scan"),
     "ml_conformal_interval": (1.2, "distributed_row_number global rank"),
     "agg_count_min_sketch": (1.0, "bounded d*w cell merge"),
